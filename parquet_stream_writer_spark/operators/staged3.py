@@ -1442,7 +1442,9 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             degs.agg(
                 F.lit(rnd).alias("round"),
                 F.count(F.lit(1)).alias("n_nodes"),
-                (F.sum("deg") / 2).cast("long").alias("n_edges"),
+                # coalesce: a round that peels every edge sums no rows
+                # (NULL); the oracle's count(*) / 2 gives 0.
+                (F.coalesce(F.sum("deg"), F.lit(0)) / 2).cast("long").alias("n_edges"),
             )
         )
     out = snapshots[0]

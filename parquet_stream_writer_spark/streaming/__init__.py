@@ -6,8 +6,10 @@
   session) mirroring the batch-verified shapes in
   ``operators.streaming_batch``, plus the bounded-state stream-stream
   interval join.
-- ``stateful`` — custom keyed state via ``applyInPandasWithState``
-  (running counters, cross-batch dedup).
+- ``stateful`` — keyed streaming twins of batch operators: native
+  streaming aggregations for the counting twins (user lifetime,
+  hour-error counts, day-type mix), ``applyInPandasWithState`` folds
+  for the rest (running profiles, sketches, sessions, as-of joins).
 """
 
 from parquet_stream_writer_spark.streaming.sinks import (

@@ -12,10 +12,16 @@ Two modes:
   reference semantics (driver-side sequential writer). Right for
   modest-rate streams where deterministic ``prefix-N.parquet`` naming
   and byte thresholds matter more than parallel write bandwidth.
+  Each micro-batch is collected once (one Spark job): the writer
+  itself skips zero-row batches and creates no file until a real
+  flush, so an empty micro-batch leaves no file without a separate
+  emptiness probe.
 - ``StreamingShardSink(path=..., shard_size_bytes=...)`` (no writer) —
   distributed: each micro-batch is written with
   ``ShardedDatasetWriter`` under ``path/batch=N/``. Scales with the
-  cluster; naming is deterministic per micro-batch.
+  cluster; naming is deterministic per micro-batch. An ``isEmpty()``
+  probe skips empty micro-batches, since a Spark write of an empty
+  DataFrame still leaves a schema-only part file.
 """
 
 from __future__ import annotations
@@ -51,11 +57,13 @@ class StreamingShardSink:
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         self.batches_seen += 1
-        if batch_df.isEmpty():  # lazy-creation parity: no files for empty batches
-            return
         if self.writer is not None:
+            # No emptiness probe: the writer drops zero-row batches and
+            # opens no file before a real flush (lazy creation).
             self.writer.write_dataframe(batch_df)
             self.written_files = list(self.writer.written_files)
+            return
+        if batch_df.isEmpty():  # lazy-creation parity: no files for empty batches
             return
         out = self.path / f"batch={epoch_id}"
         out.parent.mkdir(parents=True, exist_ok=True)

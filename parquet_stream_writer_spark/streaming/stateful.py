@@ -1,4 +1,6 @@
-"""Custom keyed streaming state via ``applyInPandasWithState``.
+"""Keyed streaming state: native streaming aggregations where a
+built-in aggregate computes the fold exactly, ``applyInPandasWithState``
+otherwise.
 
 For operators the built-in window/dedup state machines can't express:
 arbitrary per-key accumulators updated each micro-batch.  Every twin
@@ -6,7 +8,16 @@ here maintains MERGE-SAFE state (commutative/associative folds —
 counts, sums, min/max, set unions, bottom-k under a total order), so
 the final state converges EXACTLY to its batch operator under any
 micro-batch split, and each is pinned by an equivalence test against
-the batch grain:
+the batch grain.
+
+Three counting twins are NATIVE streaming aggregations (``groupBy``
++ ``count``/``sum``/``min``/``max`` in Spark's own state store, no
+Python worker per micro-batch): ``streaming_user_lifetime``,
+``streaming_hour_error_counts`` and ``streaming_day_type_mix``.  The
+rest run a pandas fold under ``applyInPandasWithState``.  Two of them
+must: ``running_user_profile``'s double sum and the z-score twin's
+Welford fold are not exact under the re-association a native
+aggregate is free to apply.
 
 - ``running_user_profile`` — per-user count/sum/last-seen (the
   feature-store updater shape).
@@ -14,16 +25,18 @@ the batch grain:
 - ``streaming_ewma_smooth`` — bounded K-value ring, fold-order exact.
 - ``streaming_funnel`` — first-occurrence funnel stage timestamps.
 - ``streaming_bot_flags`` — per-type counts + active-day set census.
-- ``streaming_user_lifetime`` — first/last/count, percentile rollup.
+- ``streaming_user_lifetime`` — first/last/count, percentile rollup
+  (native).
 - ``streaming_reservoir_per_group`` — deterministic bottom-k-by-hash
   sample, exact twin of ``sample_reservoir_per_group``.
 - ``streaming_active_days`` — distinct active-day set, the substrate
   of ``events_growth_accounting``'s lifecycle census.
 - ``streaming_hour_error_counts`` — per-hour (events, errors) counts
   with the cross-multiplied breach flag, the substrate of
-  ``events_error_rate_slo``'s daily SLO report.
+  ``events_error_rate_slo``'s daily SLO report (native).
 - ``streaming_day_type_mix`` — per-(day, event-type) counts, the
-  substrate of ``agg_entropy_categorical``'s daily mix/entropy report.
+  substrate of ``agg_entropy_categorical``'s daily mix/entropy report
+  (native).
 - ``streaming_seasonality_grid`` — per-(dow, hour) count/cents/user
   cells over the fixed 168-cell grid, the substrate of
   ``events_seasonality_profile``'s load-shape profile.
@@ -396,61 +409,36 @@ def streaming_bot_flags(stream: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_LIFETIME_OUTPUT_SCHEMA = (
-    "user_id long, n_events long, first_us long, last_us long, "
-    "span_days long"
-)
-#: Per-user state: (first-seen µs, last-seen µs, event count) — three
-#: scalars per key, O(users) total.  min/max/sum are commutative and
-#: associative, so the maintained state is merge-safe under any
-#: micro-batch split or arrival order.
-_LIFETIME_STATE_SCHEMA = "first_us long, last_us long, n long"
-
-
-def _update_lifetime(key, pdf_iter, state: GroupState):
-    import pandas as pd
-
-    first, last, n = state.get if state.exists else (None, None, 0)
-    for pdf in pdf_iter:
-        # Unit-pinned us (ADVICE r17): don't assume the hop yields ns.
-        us = pd.to_datetime(pdf["ts"]).astype("datetime64[us]").astype("int64")
-        bmin, bmax = int(us.min()), int(us.max())
-        first = bmin if first is None or bmin < first else first
-        last = bmax if last is None or bmax > last else last
-        n += len(pdf)
-    state.update((first, last, n))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "first_us": [first],
-            "last_us": [last],
-            "span_days": [(last - first) // 86_400_000_000],
-        }
-    )
-
-
 def streaming_user_lifetime(stream: DataFrame) -> DataFrame:
     """Per-user streaming lifetime state, the lift of
     ``operators.staged4.events_user_lifetime``'s per-user grain:
     first-seen / last-seen / event count per key, refreshed span-days
-    emitted per micro-batch (update semantics).  min, max and count
-    are merge-safe and arrival-order-insensitive, so the final state
-    converges EXACTLY to the batch per_user relation no matter how
-    events are split across micro-batches; the batch operator's
+    emitted per micro-batch (update semantics).
+
+    A NATIVE streaming aggregation: ``count(1)``, ``min`` and ``max``
+    of ``unix_micros(ts)`` per ``user_id`` in Spark's own state store,
+    then ``span_days = (last_us - first_us) div 86400000000``.  Output
+    is ``user_id long, n_events long, first_us long, last_us long,
+    span_days long``; run it in ``update`` output mode.  min, max and
+    count are merge-safe and arrival-order-insensitive, so the final
+    state converges EXACTLY to the batch per_user relation no matter
+    how events are split across micro-batches; the batch operator's
     nearest-rank percentile rollup is a bounded-cell aggregate over
     this relation (pinned by
     test_streaming_user_lifetime_matches_batch)."""
+    from pyspark.sql import functions as F
+
     return (
-        stream.select("user_id", "ts")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_lifetime,
-            outputStructType=_LIFETIME_OUTPUT_SCHEMA,
-            stateStructType=_LIFETIME_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        stream.select(
+            "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us")
         )
+        .groupBy("user_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.min("us").alias("first_us"),
+            F.max("us").alias("last_us"),
+        )
+        .withColumn("span_days", F.expr("(last_us - first_us) div 86400000000"))
     )
 
 
@@ -592,40 +580,6 @@ def streaming_active_days(stream: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_SLO_OUTPUT_SCHEMA = "hr timestamp_ntz, n long, e long, breach boolean"
-#: Per-hour state: total events and error events — two commutative
-#: sums, so the state is merge-safe under any micro-batch split or
-#: arrival order; the key domain is the calendar hour, so state is
-#: calendar-bounded, never stream-length-bounded.
-_SLO_STATE_SCHEMA = "n long, e long"
-
-
-def _update_hour_errors(key, pdf_iter, state: GroupState):
-    import pandas as pd
-
-    from parquet_stream_writer_spark.operators.staged5 import (
-        _SLO_DEN,
-        _SLO_NUM,
-    )
-
-    n, e = state.get if state.exists else (0, 0)
-    for pdf in pdf_iter:
-        n += len(pdf)
-        e += int((pdf["event_type"] == "error").sum())
-    state.update((n, e))
-    yield pd.DataFrame(
-        {
-            "hr": [key[0]],
-            "n": [n],
-            "e": [e],
-            # Cross-multiplied integer test — the exact predicate of
-            # operators.staged5.events_error_rate_slo (whose _SLO_NUM/
-            # _SLO_DEN are imported, so the twin can't drift).
-            "breach": [e * _SLO_DEN > n * _SLO_NUM],
-        }
-    )
-
-
 def streaming_hour_error_counts(stream: DataFrame) -> DataFrame:
     """Per-hour streaming (events, errors) counts with the 30%
     error-share breach flag — the substrate of
@@ -633,6 +587,15 @@ def streaming_hour_error_counts(stream: DataFrame) -> DataFrame:
     SLO report (n_hours, n_breached, worst hour by share) is a pure
     day-grain rollup over this relation's FINAL per-hour states
     (pinned by test_streaming_hour_errors_slo_rollup).
+
+    A NATIVE streaming aggregation: ``groupBy(hr)`` with ``count(1)
+    AS n`` and ``sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0
+    END) AS e`` (a NULL type counts as not-error, so ``e`` is never
+    NULL), then the cross-multiplied integer test
+    ``e * _SLO_DEN > n * _SLO_NUM`` — the exact predicate of
+    ``events_error_rate_slo``, whose constants are imported so the
+    twin can't drift.  Output is ``hr timestamp_ntz, n long, e long,
+    breach boolean``; run it in ``update`` output mode.
 
     Counts are commutative sums, so the final state converges EXACTLY
     to the batch per-hour aggregate under any micro-batch split;
@@ -646,41 +609,28 @@ def streaming_hour_error_counts(stream: DataFrame) -> DataFrame:
     """
     from pyspark.sql import functions as F
 
+    from parquet_stream_writer_spark.operators.staged5 import (
+        _SLO_DEN,
+        _SLO_NUM,
+    )
+
     return (
         stream.select(
-            F.date_trunc("hour", F.col("ts")).alias("hr"), "event_type"
+            F.date_trunc("hour", F.col("ts")).cast("timestamp_ntz").alias("hr"),
+            "event_type",
         )
         .groupBy("hr")
-        .applyInPandasWithState(
-            _update_hour_errors,
-            outputStructType=_SLO_OUTPUT_SCHEMA,
-            stateStructType=_SLO_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)).alias("e"),
         )
+        .withColumn("breach", F.col("e") * _SLO_DEN > F.col("n") * _SLO_NUM)
     )
 
 
 # ---------------------------------------------------------------------------
 # Streaming per-(day, type) mix substrate (entropy twin)
 # ---------------------------------------------------------------------------
-
-
-_MIX_OUTPUT_SCHEMA = "day timestamp_ntz, event_type string, c long"
-#: Per-(day, type) state: ONE commutative count — merge-safe under any
-#: micro-batch split or arrival order; the key domain is calendar-day ×
-#: event-type, so state is calendar-bounded, never stream-length-bounded.
-_MIX_STATE_SCHEMA = "c long"
-
-
-def _update_day_type_mix(key, pdf_iter, state: GroupState):
-    import pandas as pd
-
-    (c,) = state.get if state.exists else (0,)
-    for pdf in pdf_iter:
-        c += len(pdf)
-    state.update((c,))
-    yield pd.DataFrame({"day": [key[0]], "event_type": [key[1]], "c": [c]})
 
 
 def streaming_day_type_mix(stream: DataFrame) -> DataFrame:
@@ -692,6 +642,14 @@ def streaming_day_type_mix(stream: DataFrame) -> DataFrame:
     reproduces the batch operator's 1e-6-quantized c·log2(c) exactly —
     the round-13 integer-sum entropy convention, so the twin can't
     drift from the registered arithmetic).
+
+    A NATIVE streaming aggregation (``groupBy(day, event_type)
+    .agg(count(1))``), not a Python fold: Spark keeps the count in its
+    own state store, so no Python worker runs per micro-batch.  Output
+    is ``day timestamp_ntz, event_type string, c long``; run it in
+    ``update`` output mode (``complete`` also works).  ``day`` is cast
+    back to ``timestamp_ntz`` because ``date_trunc`` yields a session-
+    zone timestamp (UTC in this repo's sessions).
 
     The count is a commutative sum, so the final state converges
     EXACTLY to the batch per-cell aggregate under any micro-batch
@@ -708,16 +666,11 @@ def streaming_day_type_mix(stream: DataFrame) -> DataFrame:
 
     return (
         stream.select(
-            F.date_trunc("day", F.col("ts")).alias("day"), "event_type"
+            F.date_trunc("day", F.col("ts")).cast("timestamp_ntz").alias("day"),
+            "event_type",
         )
         .groupBy("day", "event_type")
-        .applyInPandasWithState(
-            _update_day_type_mix,
-            outputStructType=_MIX_OUTPUT_SCHEMA,
-            stateStructType=_MIX_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        .agg(F.count(F.lit(1)).alias("c"))
     )
 
 

@@ -78,6 +78,47 @@ def test_kcore_peel_matches_bruteforce(spark, tmp_path, seed):
     assert got == want
 
 
+def test_kcore_peel_all_peeled_reports_zero_edges(spark, tmp_path):
+    """A graph of disjoint single edges (every node has degree 1 < k)
+    is peeled bare in round 1: every round must report 0 nodes and 0
+    edges — not a NULL edge count from summing no degree rows — and
+    match the DuckDB oracle on the same corpus."""
+    import duckdb
+
+    from parquet_stream_writer_spark.operators.staged3 import (
+        _KCORE_ROUNDS,
+        ORACLE_GRAPH_KCORE_PEEL,
+        graph_kcore_peel,
+    )
+
+    n = 8
+    li = pd.DataFrame(
+        {
+            "l_orderkey": np.arange(n, dtype="int64"),
+            "l_suppkey": np.arange(n, dtype="int64"),
+        }
+    )
+    orders = pd.DataFrame(
+        {
+            "o_orderkey": np.arange(n, dtype="int64"),
+            "o_custkey": np.arange(n, dtype="int64"),
+        }
+    )
+    sf = _write(tmp_path, "lineitem", li)
+    _write(tmp_path, "orders", orders)
+    got = [
+        (r.round, r.n_nodes, r.n_edges)
+        for r in graph_kcore_peel(spark, sf).collect()
+    ]
+    want = [(rnd, 0, 0) for rnd in range(1, _KCORE_ROUNDS + 1)]
+    assert got == want
+
+    con = duckdb.connect()
+    con.register("lineitem", li)
+    con.register("orders", orders)
+    assert [tuple(r) for r in con.sql(ORACLE_GRAPH_KCORE_PEEL).fetchall()] == want
+
+
 @pytest.mark.parametrize("seed", [19, 808])
 def test_neyman_allocation_matches_bruteforce(spark, tmp_path, seed):
     """Largest-remainder Neyman allocation vs a python model — strata

@@ -134,6 +134,101 @@ def test_foreachbatch_to_stream_writer(spark, events_stream_dir, tmp_path):
     assert total == spark.read.parquet(str(events_stream_dir)).count()
 
 
+def test_foreachbatch_writer_empty_batches_leave_no_file(
+    spark, events_stream_dir, tmp_path
+):
+    """Writer mode has no emptiness probe: micro-batches that a filter
+    empties must still leave no shard file and an empty manifest,
+    because the writer itself skips zero-row batches and creates its
+    file lazily."""
+    import pyarrow as pa
+
+    from parquet_stream_writer_spark import ParquetStreamWriter
+
+    stream = (
+        _events_stream(spark, events_stream_dir)
+        .where(F.col("event_id") < 0)
+        .select("event_id", "event_type")
+    )
+    schema = pa.schema([("event_id", pa.int64()), ("event_type", pa.string())])
+    writer_path = tmp_path / "empty_out"
+    writer = ParquetStreamWriter(
+        writer_path, schema, shard_size_bytes=64 << 10, buffer_size_bytes=1
+    )
+    sink = StreamingShardSink(writer=writer)
+    q = sink.start(stream, checkpoint=tmp_path / "ckpt_empty")
+    q.awaitTermination(120)
+    sink.close()
+    assert sink.batches_seen >= 4  # the empty batches did reach the sink
+    assert sink.written_files == []
+    assert writer.written_files == []
+    assert not list(writer_path.glob("*.parquet"))
+
+
+def test_foreachbatch_writer_one_job_per_batch(spark, events_stream_dir, tmp_path):
+    """Writer mode collects each non-empty micro-batch exactly once:
+    ``process_batch`` starts one Spark job (the Arrow collect), not an
+    emptiness probe plus a collect.  Jobs are counted by tagging each
+    call with its own job group."""
+    import pyarrow as pa
+
+    from parquet_stream_writer_spark import ParquetStreamWriter
+
+    stream = _events_stream(spark, events_stream_dir).select("event_id", "event_type")
+    schema = pa.schema([("event_id", pa.int64()), ("event_type", pa.string())])
+    writer = ParquetStreamWriter(tmp_path / "one_job_out", schema)
+    sink = StreamingShardSink(writer=writer)
+    sc = spark.sparkContext
+    tag = f"one-job-{uuid.uuid4().hex[:8]}"
+    jobs: dict[int, int] = {}
+    process_batch = sink.process_batch
+
+    def counted(batch_df, epoch_id):
+        group = f"{tag}-{epoch_id}"
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, "StreamingShardSink.process_batch")
+        try:
+            process_batch(batch_df, epoch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+        jobs[epoch_id] = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sink.process_batch = counted
+    q = sink.start(stream, checkpoint=tmp_path / "ckpt_one_job")
+    q.awaitTermination(120)
+    sink.close()
+    assert len(jobs) >= 4  # one micro-batch per input file, none empty
+    assert set(jobs.values()) == {1}, jobs
+    total = sum(pq.read_table(p).num_rows for p in writer.written_files)
+    assert total == spark.read.parquet(str(events_stream_dir)).count()
+
+
+def test_counting_twins_are_native_aggregations(spark, events_stream_dir):
+    """The three counting twins plan as native streaming aggregations:
+    no ``FlatMapGroupsInPandasWithState`` node (a Python worker per
+    micro-batch), while a pandas-fold twin still shows one — the
+    positive control that the plan check can see the node."""
+    from parquet_stream_writer_spark.streaming.stateful import (
+        streaming_day_type_mix,
+        streaming_hour_error_counts,
+        streaming_user_lifetime,
+    )
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().analyzed().toString()
+
+    stream = _events_stream(spark, events_stream_dir)
+    for twin in (
+        streaming_day_type_mix,
+        streaming_hour_error_counts,
+        streaming_user_lifetime,
+    ):
+        p = plan(twin(stream))
+        assert "FlatMapGroupsInPandasWithState" not in p, twin.__name__
+        assert "Aggregate" in p, twin.__name__
+    assert "FlatMapGroupsInPandasWithState" in plan(running_user_profile(stream))
+
+
 def test_foreachbatch_distributed_sink(spark, events_stream_dir, tmp_path):
     stream = _events_stream(spark, events_stream_dir, files_per_trigger=2)
     sink = StreamingShardSink(path=tmp_path / "dist_out", shard_size_bytes=128 << 10)

@@ -41,6 +41,9 @@ def _run(spark, fn, sf_dir: str) -> float:
 
 
 def main() -> None:
+    # As in bench.py: never read the cross-run dedup-memo disk tier, or
+    # every repetition after the first skips the mining it should time.
+    os.environ.pop("SPARK_GRAFT_MEMO_DIR", None)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     reps = int(os.environ.get("SPARK_GRAFT_SOLO_REPS", "5"))
