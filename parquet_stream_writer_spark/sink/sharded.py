@@ -13,9 +13,10 @@ fully distributed write path:
 2. convert the byte threshold into ``maxRecordsPerFile`` so every
    *task* rolls files at the target size — no coalesce(1), no driver
    data movement, scales linearly with executors;
-3. optionally rename the committed ``part-*`` files to the
-   deterministic ``prefix-N.parquet`` sequence (ordered by Spark's
-   part index, so the naming is stable run-to-run).
+3. optionally rename the committed ``part-*`` files (and their
+   ``.crc`` checksum sidecars) to the deterministic ``prefix-N.parquet``
+   sequence (ordered by Spark's part index, so the naming is stable
+   run-to-run).
 
 On a real cluster step 3 is a metadata-only operation on the object
 store/namenode; the data never moves.
@@ -134,6 +135,11 @@ class ShardedDatasetWriter:
             index[part.parent] = i + 1
             target = part.parent / f"{self.file_prefix}-{i}.parquet"
             part.rename(target)
+            # Hadoop's checksummed local FS keeps a `.<name>.crc` sidecar;
+            # move it along so the shard is still verified on read.
+            crc = part.with_name(f".{part.name}.crc")
+            if crc.exists():
+                crc.rename(target.with_name(f".{target.name}.crc"))
             final.append(target.absolute())
         return final
 

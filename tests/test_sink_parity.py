@@ -377,6 +377,38 @@ def test_sharded_writer_partition_by(tmp_path, spark):
     assert back.where("bucket = 1").count() == 2000
 
 
+def assert_crc_sidecars_follow_shards(root, files):
+    """Every renamed shard has its ``.<name>.crc`` sidecar, and no
+    sidecar of a ``part-*`` file is left behind."""
+    assert files
+    for p in files:
+        assert (p.parent / f".{p.name}.crc").is_file(), p
+    assert not list(root.rglob(".part-*.crc"))
+
+
+def test_sharded_writer_renames_crc_sidecars(tmp_path, spark):
+    """The checksum sidecars move with their shards, so a read-back of
+    the renamed shards is still checksum-verified: one flipped byte in
+    a data page fails the scan instead of passing unnoticed."""
+    out = tmp_path / "dist"
+    df = spark.range(5000).selectExpr("id", "repeat('y', 40) as value").coalesce(2)
+    files = ShardedDatasetWriter(out, shard_size_bytes=60_000).write(df)
+    assert_crc_sidecars_follow_shards(out, files)
+    bykey = tmp_path / "bykey"
+    df = spark.range(600).selectExpr("id", "cast(id % 3 as int) as bucket")
+    files = ShardedDatasetWriter(bykey, shard_size_bytes=1 << 20, partition_by=["bucket"]).write(df)
+    assert_crc_sidecars_follow_shards(bykey, files)
+
+    shard = sorted(out.glob("dist-*.parquet"))[0]
+    chunk = pq.ParquetFile(shard).metadata.row_group(0).column(1)
+    offset = chunk.data_page_offset + chunk.total_compressed_size // 2
+    data = bytearray(shard.read_bytes())
+    data[offset] ^= 0xFF
+    shard.write_bytes(bytes(data))
+    with pytest.raises(Exception, match="(?i)checksum"):
+        spark.read.parquet(str(out)).collect()
+
+
 def test_compact_dataset(tmp_path, spark):
     from parquet_stream_writer_spark.sink import compact_dataset
 

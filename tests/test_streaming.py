@@ -203,6 +203,41 @@ def test_foreachbatch_writer_one_job_per_batch(spark, events_stream_dir, tmp_pat
     assert total == spark.read.parquet(str(events_stream_dir)).count()
 
 
+def _processes_started() -> int:
+    """The kernel's count of processes created since boot."""
+    with open("/proc/stat") as f:
+        for line in f:
+            if line.startswith("processes "):
+                return int(line.split()[1])
+    raise AssertionError("no processes line in /proc/stat")
+
+
+def test_foreachbatch_drain_starts_no_processes(spark, sf_dir, tmp_path):
+    """A micro-batch's checkpoint and offset files go through the
+    session's fork-free local file system: stock Hadoop without
+    libhadoop starts ~65 chmod/readlink processes per micro-batch,
+    this drain at most 5. The kernel counter also counts new threads
+    (machine-wide), so a first drain warms the JVM's thread pools and
+    the second one is measured."""
+    import pyarrow as pa
+
+    from parquet_stream_writer_spark import ParquetStreamWriter
+
+    src = tmp_path / "events3"
+    load_events(spark, sf_dir).repartition(3).write.parquet(str(src))
+    schema = pa.schema([("event_id", pa.int64()), ("event_type", pa.string())])
+    for run in ("warm", "measured"):
+        stream = _events_stream(spark, src).select("event_id", "event_type")
+        sink = StreamingShardSink(writer=ParquetStreamWriter(tmp_path / run, schema))
+        before = _processes_started()
+        q = sink.start(stream, checkpoint=tmp_path / f"ckpt_{run}")
+        q.awaitTermination(120)
+        sink.close()
+        spawned = _processes_started() - before
+    assert sink.batches_seen == 3
+    assert spawned <= 5 * sink.batches_seen, spawned
+
+
 def test_counting_twins_are_native_aggregations(spark, events_stream_dir):
     """The three counting twins plan as native streaming aggregations:
     no ``FlatMapGroupsInPandasWithState`` node (a Python worker per
@@ -237,6 +272,19 @@ def test_foreachbatch_distributed_sink(spark, events_stream_dir, tmp_path):
     assert sink.written_files
     total = sum(pq.read_table(p).num_rows for p in sink.written_files)
     assert total == spark.read.parquet(str(events_stream_dir)).count()
+
+
+def test_distributed_sink_shards_keep_crc_sidecars(spark, events_stream_dir, tmp_path):
+    """Path mode writes through ShardedDatasetWriter: each renamed
+    shard keeps its checksum sidecar and no part-file sidecar is left."""
+    stream = _events_stream(spark, events_stream_dir, files_per_trigger=2)
+    out = tmp_path / "dist_crc"
+    sink = StreamingShardSink(path=out, shard_size_bytes=128 << 10)
+    sink.start(stream, checkpoint=tmp_path / "ckpt_crc").awaitTermination(120)
+    assert sink.written_files
+    for p in sink.written_files:
+        assert (p.parent / f".{p.name}.crc").is_file(), p
+    assert not list(out.rglob(".part-*.crc"))
 
 
 def test_stream_stream_interval_join(spark, sf_dir, events_stream_dir):
