@@ -11,10 +11,13 @@ point on the exactness/scale tradeoff:
   the small-corpus ground truth the approximate methods are judged
   against.
 - ``dedup_minhash_lsh``      — MinHash signatures + banded LSH: only
-  pairs sharing a band bucket are verified. This is the 100 TB path:
-  signature build is one shuffle of (doc × K) rows, banding is a
-  shuffle of (doc × bands) rows, and exact verification touches only
-  candidate pairs. Hot buckets (degenerate shingles) are capped at
+  pairs sharing a band bucket are verified. This is the 100 TB path,
+  built on one cached relation, each document's set of distinct
+  shingles (doc_id, sh): signatures are map-side ``array_min`` over
+  the set (no shuffle of the shingle stream), banding is one shuffle
+  of (doc × bands) rows into bucket aggregates that emit the pairs,
+  and exact verification joins only candidate pairs to the two
+  documents' sets. Hot buckets (degenerate shingles) are capped at
   ``_BUCKET_CAP`` docs — the standard LSH skew guard; the cap is
   replicated in the oracle so results stay bit-identical.
 - ``dedup_simhash``          — 16-bit SimHash over token frequencies;
@@ -25,9 +28,7 @@ Everything is built-in JVM expressions — no Python UDFs. The hash
 family is md5 (same lowercase hex in Spark and DuckDB), which makes
 even the *approximate* pipelines exactly reproducible by the oracle:
 min over a fixed-width integer prefix of the digest is a valid
-uniform MinHash, identical across engines, and keeps the signature
-aggregation hash-based (var-length string buffers would demote it to
-a SortAggregate over the full shingle stream).
+uniform MinHash, identical across engines.
 """
 
 from __future__ import annotations
@@ -61,7 +62,7 @@ _J_THRESHOLD = 0.5
 # In-session sharing of the expensive dedup intermediates
 # ---------------------------------------------------------------------------
 
-#: Memoized heavy intermediates (shingle relation, LSH candidates,
+#: Memoized heavy intermediates (shingle sets, LSH candidates,
 #: verified pairs, CC labels), keyed by (stage, application, sf_dir,
 #: corpus fingerprint). Five queries build on the same mined pair set
 #: (`dedup_minhash_lsh` → connected components → cluster
@@ -78,7 +79,7 @@ _MEMO_LOCK = threading.Lock()
 #: One lock per memo key: concurrent queries on UNRELATED stages (or
 #: corpora) proceed in parallel; only same-key callers wait for the
 #: in-flight build. Builds nest (_cc_labels -> _verified_pairs ->
-#: shingles) on DIFFERENT keys in a fixed DAG order, so there is no
+#: shingle_sets) on DIFFERENT keys in a fixed DAG order, so there is no
 #: lock cycle; RLock covers same-thread same-key reentry.
 _BUILD_LOCKS: dict[tuple, threading.RLock] = {}
 #: Max memoized DataFrames across all corpora (4 stages per corpus; a
@@ -96,9 +97,9 @@ _MEMO_CAP = 16
 #: set, the verified pairs, and the CC labels; each is a deterministic
 #: function of the corpus bytes (md5 shingling + banded buckets, exact
 #: Jaccard, min-label fixpoint), so a reload is value-identical to a
-#: rebuild.  The corpus-sized shingle relation (the one intermediate
-#: that scales with total corpus bytes rather than with the near-dup
-#: pair count) is never persisted.
+#: rebuild.  The corpus-sized shingle-set relation (the one
+#: intermediate that scales with total corpus bytes rather than with
+#: the near-dup pair count) is never persisted.
 _PERSIST_STAGES: dict[str, tuple[str, int]] = {
     "lsh_candidates": ("d1", 16),
     "verified_pairs": ("d1", 16),
@@ -180,13 +181,20 @@ def clear_dedup_memo() -> None:
         _BUILD_LOCKS.clear()
 
 
-def _shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The cached distinct shingle relation, one instance per corpus:
-    every dedup op that touches shingles reuses the same cached
+def _shingle_sets_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The cached per-document shingle-set relation, one instance per
+    corpus: every dedup op that touches shingles reuses the same cached
     DataFrame (Spark's CacheManager would usually dedupe identical
     plans anyway; the memo makes the sharing explicit and survives
     plan-probe variance in ``scan_parallel``)."""
-    return _memo(spark, sf_dir, "shingles", lambda: _shingles(spark, sf_dir).cache())
+    return _memo(
+        spark, sf_dir, "shingle_sets", lambda: _shingle_sets(spark, sf_dir).cache()
+    )
+
+
+def _shingles_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (doc_id, shingle) rows of the cached set relation."""
+    return _explode_sets(_shingle_sets_shared(spark, sf_dir))
 
 
 def _hex_to_int_sql(col: str, width: int) -> str:
@@ -214,7 +222,7 @@ def _hex4_to_int_sql(col: str) -> str:
     return _hex_to_int_sql(col, 4)
 
 
-def _hex_prefix_int(expr: str, width: int) -> F.Column:
+def _hex_prefix_sql(expr: str, width: int) -> str:
     """Spark-side fast path of :func:`_hex_to_int_sql`: integer value
     of the first ``width`` hex chars of a digest via ``conv`` — ONE
     digest evaluation per row instead of one per hex digit (the
@@ -224,18 +232,27 @@ def _hex_prefix_int(expr: str, width: int) -> F.Column:
     oracle keeps the portable instr-sum — the VALUES are identical
     (both read the prefix as a base-16 integer), which the oracle
     hash-match verifies end-to-end."""
-    return F.expr(f"cast(conv(substring({expr}, 1, {width}), 16, 10) as bigint)")
+    return f"cast(conv(substring({expr}, 1, {width}), 16, 10) as bigint)"
 
 
-def _shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
-    """Distinct (doc_id, shingle) of ``n``-token shingles.
+def _hex_prefix_int(expr: str, width: int) -> F.Column:
+    """:func:`_hex_prefix_sql` as a Column."""
+    return F.expr(_hex_prefix_sql(expr, width))
+
+
+def _shingle_sets(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
+    """Each document's set of distinct ``n``-token shingles: (doc_id,
+    sh), one row per doc_id, documents without a shingle dropped.
 
     Shingles are built map-side with array higher-order functions
-    (``transform`` over a ``sequence`` of start offsets) — zero
-    shuffle, in contrast to the posexplode + window-``lead`` shape
-    which sorts every token. The only shuffle in this stage is the
-    final ``distinct`` on (doc_id, shingle), which every downstream
-    dedup op needs anyway.
+    (``transform`` over a ``sequence`` of start offsets), in contrast
+    to the posexplode + window-``lead`` shape which sorts every token.
+    The per-row arrays are then unioned per doc_id
+    (``array_distinct(flatten(collect_list(...)))``), which keeps set
+    semantics when a doc_id spans several rows. When ``scan_parallel``
+    repartitions it hash-partitions on doc_id, so the grouping adds no
+    exchange; otherwise it shuffles one row per input row. The
+    exploded shingle stream itself is never shuffled.
     """
     # Materialize the token array as its own column first: expressions
     # referenced inside a higher-order-function lambda are re-evaluated
@@ -247,20 +264,27 @@ def _shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
     # 0-based bracket indexing (GetArrayItem) stays inside codegen;
     # the ``element_at`` lambda variant is ~6x slower interpreted.
     concat = ", ".join(f"toks[i+{j}]" for j in range(n))
-    sh = docs.select(
+    rows = docs.select(
         "doc_id",
-        F.explode(
-            F.expr(
-                f"case when size(toks) >= {n} then "
-                f"transform(sequence(0, size(toks)-{n}), "
-                f"i -> concat_ws(' ', {concat})) end"
-            )
-        ).alias("shingle"),
+        F.expr(
+            f"case when size(toks) >= {n} then "
+            f"transform(sequence(0, size(toks)-{n}), "
+            f"i -> concat_ws(' ', {concat})) end"
+        ).alias("sh"),
     )
-    return sh.distinct()
+    return (
+        rows.groupBy("doc_id")
+        .agg(F.array_distinct(F.flatten(F.collect_list("sh"))).alias("sh"))
+        .where(F.size("sh") > 0)
+    )
 
 
-#: Oracle twin of :func:`_shingles` as a CTE body (DuckDB dialect —
+def _explode_sets(sets: DataFrame) -> DataFrame:
+    """(doc_id, sh) → distinct (doc_id, shingle) rows, map-side."""
+    return sets.select("doc_id", F.explode("sh").alias("shingle"))
+
+
+#: Oracle twin of :func:`_shingle_sets`, exploded, as a CTE body (DuckDB dialect —
 #: unnest/generate_subscripts instead of posexplode; lead is shared).
 _SQL_SHINGLES = """
 toks AS (
@@ -340,14 +364,19 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers (sizes, both self-join sides) — without
     # materialization each one re-ran the DF window (exchange + sort
     # over the whole shingle stream; AQE reuses the exchange but not
-    # the sort/window above it). One lazy localCheckpoint = one window
-    # pass; on a real cluster it becomes persist(DISK_ONLY).
+    # the sort/window above it). One localCheckpoint = one window pass;
+    # on a real cluster it becomes persist(DISK_ONLY). It is eager:
+    # lazily, the three consumers' stages compute it concurrently, the
+    # first to finish checkpoints it and drops the lineage, and the
+    # others' tasks then report SQL metrics that the JVM may already
+    # have collected ("attempted to access non-existent accumulator",
+    # ~100 log entries per sf0.1 run).
     ds = (
         _shingles_shared(spark, sf_dir)
         .withColumn("df", F.count(F.lit(1)).over(wdf))
         .where(F.col("df") <= _NGRAM_DF_CAP)
         .drop("df")
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = ds.alias("a")
@@ -407,85 +436,114 @@ WHERE n_common * 1.0 / (s1.n + s2.n - n_common) >= {_J_THRESHOLD}
 # MinHash + banded LSH (the scale path)
 # ---------------------------------------------------------------------------
 
-def _minhash_signatures(ds: DataFrame) -> DataFrame:
-    """K md5-seeded min-hashes per doc: one groupBy(doc_id) computes
-    all K mins map-side-partially (Catalyst partial agg), so the
-    shuffle carries one row per doc.
+def _minhash_signatures(sets: DataFrame) -> DataFrame:
+    """The set relation plus K md5-seeded min-hashes per doc (columns
+    ``h0``..``h{K-1}``), computed map-side as ``array_min`` over each
+    document's shingle set: no shuffle, no aggregation.
 
-    The min is over a fixed-width BIGINT (first 8 hex chars of the
-    digest, portable ``instr`` conversion shared with the oracle) —
-    var-length string buffers would force the whole aggregation from
-    HashAggregate down to SortAggregate, a full sort of the shingle
-    stream, the largest relation in the pipeline."""
+    Each min-hash reads a fixed-width BIGINT (first 8 hex chars of the
+    digest) — the same value the oracle's portable ``instr``
+    conversion yields, so the min over a document's shingles matches
+    the oracle's ``min(...) GROUP BY doc_id`` exactly."""
     mins = [
-        F.min(_hex_prefix_int(f"md5(concat(shingle, '#{i}'))", 8)).alias(f"h{i}")
+        F.expr(
+            "array_min(transform(sh, s -> "
+            + _hex_prefix_sql(f"md5(concat(s, '#{i}'))", 8)
+            + "))"
+        ).alias(f"h{i}")
         for i in range(_K)
     ]
-    return ds.groupBy("doc_id").agg(*mins)
+    return sets.select("*", *mins)
 
 
-def _lsh_candidates(ds: DataFrame) -> DataFrame:
-    """Distinct banded-LSH candidate pairs (d1 < d2) from the shingle
-    relation: signature → band keys → capped bucket self-join."""
-    sig = _minhash_signatures(ds)
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|", *[F.col(f"h{b * _ROWS_PER_BAND + r}") for r in range(_ROWS_PER_BAND)]
-            )
-        ).alias(f"band{b}")
+def _band_keys(sets: DataFrame) -> DataFrame:
+    """(doc_id, band_id, bkey): one row per document and band, the key
+    being md5 of the band's r concatenated min-hashes. Map-side from
+    the set relation — the first exchange of the miner is the bucket
+    aggregate in :func:`_lsh_candidates`."""
+    sig = _minhash_signatures(sets)
+    bands = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.md5(
+                F.concat_ws(
+                    "|", *[F.col(f"h{b * _ROWS_PER_BAND + r}") for r in range(_ROWS_PER_BAND)]
+                )
+            ).alias("bkey"),
+        )
         for b in range(_BANDS)
     ]
-    banded = sig.select("doc_id", *band_cols)
-    stacked = banded.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), F.col(f"band{b}").alias("bkey"))
-                    for b in range(_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band_id").alias("band_id"), F.col("bk.bkey").alias("bkey"))
-
-    # Skew guard: drop degenerate buckets before the self-join. A
-    # window count shares the (band_id, bkey) shuffle with the
-    # self-join below — one pass, no driver-side broadcast job (the
-    # semi-join formulation computes the banding twice).
-    wb = Window.partitionBy("band_id", "bkey")
-    pruned = (
-        stacked.withColumn("bn", F.count(F.lit(1)).over(wb))
-        .where(F.col("bn") <= _BUCKET_CAP)
-        .drop("bn")
+    return sig.select("doc_id", F.explode(F.array(*bands)).alias("bk")).select(
+        "doc_id", F.col("bk.band_id").alias("band_id"), F.col("bk.bkey").alias("bkey")
     )
 
-    l = pruned.alias("l")
-    r = pruned.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.band_id") == F.col("r.band_id"))
-            & (F.col("l.bkey") == F.col("r.bkey"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+
+def _lsh_candidates(sets: DataFrame) -> DataFrame:
+    """Distinct banded-LSH candidate pairs (d1 < d2) from the set
+    relation: band keys → one aggregate per (band, key) bucket → every
+    doc pair within a bucket of at most ``_BUCKET_CAP`` docs.
+
+    The skew guard counts every row of a bucket (a NULL doc_id too,
+    like the oracle's ``count(*)``) and drops degenerate buckets
+    before any pair is formed. Pairs come from the bucket's sorted
+    doc list, so there is no self-join: the (band, key) exchange and
+    the final ``distinct`` are the miner's only shuffles. A hot
+    bucket's doc list is buffered until the cap drops it, as the
+    window partition of a bucket-count formulation would be."""
+    buckets = (
+        _band_keys(sets)
+        .groupBy("band_id", "bkey")
+        .agg(
+            F.count(F.lit(1)).alias("bn"),
+            F.array_sort(F.collect_list("doc_id")).alias("docs"),
         )
-        .select(F.col("l.doc_id").alias("d1"), F.col("r.doc_id").alias("d2"))
-        .distinct()
+        .where(F.col("bn") <= _BUCKET_CAP)
     )
+    # docs[i] paired with every later element; the CASE keeps the
+    # sequence from running backwards on a 0- or 1-doc list.
+    pairs = F.expr(
+        "case when size(docs) >= 2 then flatten(transform("
+        "sequence(0, size(docs) - 2), "
+        "i -> transform(slice(docs, i + 2, size(docs)), "
+        "d -> named_struct('d1', docs[i], 'd2', d)))) end"
+    )
+    return buckets.select(F.explode(pairs).alias("p")).select("p.d1", "p.d2").distinct()
 
 
 def _lsh_candidates_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized, lazily-checkpointed LSH candidate pair set — shared
-    by the verified-pair miner and the recall audit so the signature +
+    by the verified-pair miner and the audits so the signature +
     banding pipeline runs once per (session, corpus)."""
     return _memo(
         spark,
         sf_dir,
         "lsh_candidates",
-        lambda: _lsh_candidates(_shingles_shared(spark, sf_dir)).localCheckpoint(
+        lambda: _lsh_candidates(_shingle_sets_shared(spark, sf_dir)).localCheckpoint(
             eager=False
         ),
     )
+
+
+def _with_sides(pairs: DataFrame, docs: DataFrame) -> DataFrame:
+    """Pairs (d1, d2) joined to both documents' rows of ``docs`` (keyed
+    on ``doc_id``), each side's other columns suffixed ``1``/``2`` —
+    a doc-level join, one row per pair, never a shingle-level one."""
+    cols = [c for c in docs.columns if c != "doc_id"]
+
+    def side(k: int) -> DataFrame:
+        return docs.select(
+            F.col("doc_id").alias(f"d{k}"), *[F.col(c).alias(f"{c}{k}") for c in cols]
+        )
+
+    return pairs.join(side(1), "d1").join(side(2), "d2")
+
+
+def _exact_jaccard() -> F.Column:
+    """Exact shingle Jaccard of a :func:`_with_sides` row over the set
+    columns ``sh1``/``sh2``: |A∩B| / (|A| + |B| − |A∩B|), the same
+    integer counts the oracle's shingle join + ``count(*)`` yields."""
+    common = F.size(F.array_intersect("sh1", "sh2"))
+    return common / (F.size("sh1") + F.size("sh2") - common)
 
 
 def _verified_pairs_plan(
@@ -495,38 +553,13 @@ def _verified_pairs_plan(
     LSH candidate set) — factored out so plan tests can inspect the
     join/aggregate structure that the memoized checkpoint in
     :func:`_verified_pairs` otherwise hides behind a LogicalRDD."""
-    ds = _shingles_shared(spark, sf_dir)
+    sets = _shingle_sets_shared(spark, sf_dir)
     if candidates is None:
-        candidates = _lsh_candidates(ds)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = ds.alias("a")
-    b = ds.alias("b")
-    inter = (
-        candidates.join(a, F.col("d1") == F.col("a.doc_id"))
-        .join(
-            b,
-            (F.col("d2") == F.col("b.doc_id"))
-            & (F.col("a.shingle") == F.col("b.shingle")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    s1 = sizes.alias("s1")
-    s2 = sizes.alias("s2")
-    # `sizes` is one row per document — never broadcast at scale
-    # (see dedup_ngram_jaccard); plain equi-joins keyed on doc_id.
-    jac = (
-        inter.join(s1, F.col("d1") == F.col("s1.doc_id"))
-        .join(s2, F.col("d2") == F.col("s2.doc_id"))
-        .select(
-            "d1",
-            "d2",
-            (
-                F.col("n_common")
-                / (F.col("s1.n") + F.col("s2.n") - F.col("n_common"))
-            ).alias("j"),
-        )
-    )
+        candidates = _lsh_candidates(sets)
+    # No broadcast hint on the set relation: it is one row PER
+    # DOCUMENT, so at 100 TB it is corpus-sized — plain equi-joins
+    # keyed on doc_id (AQE may still pick broadcast at small SF).
+    jac = _with_sides(candidates, sets).select("d1", "d2", _exact_jaccard().alias("j"))
     return jac.where(F.col("j") >= _J_THRESHOLD).select(
         "d1", "d2", pround(F.col("j"), 6).alias("jaccard")
     )
@@ -553,11 +586,12 @@ def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash/LSH near-dup pairs, exact-Jaccard-verified (j >= 0.5).
 
-    Pipeline: shingles → K-wide signature (1 shuffle, 1 row/doc) →
-    band keys (md5 of r concatenated mins) → bucket self-join within
-    (band, key) with a ``_BUCKET_CAP`` skew guard → distinct candidate
-    pairs → exact verification via the inverted index. Only the last
-    step touches raw shingles again, and only for candidates.
+    Pipeline: per-document shingle sets → K-wide signature
+    (``array_min`` per set, map-side) → band keys (md5 of r
+    concatenated mins) → every doc pair within a (band, key) bucket,
+    with a ``_BUCKET_CAP`` skew guard → distinct candidate pairs → exact
+    verification by a doc-level join of each candidate to both
+    documents' sets (``size(array_intersect(...))``).
 
     The mined pair set is memoized per (session, corpus) — see
     :func:`_verified_pairs` — so the downstream dedup family
@@ -1055,8 +1089,9 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair orientation is kept (d1≠d2 both ways) because the metric
     is asymmetric. `sizes` is one row per doc — joined by key, never
     broadcast (see dedup_ngram_jaccard)."""
-    ds = _shingles_shared(spark, sf_dir)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sets = _shingle_sets_shared(spark, sf_dir)
+    ds = _explode_sets(sets)
+    sizes = sets.select("doc_id", F.size("sh").alias("n"))
     a = ds.alias("a")
     b = ds.alias("b")
     inter = (
@@ -1118,8 +1153,9 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_lsh_candidates_shared`). The ratio columns are
     null-guarded: an empty exact-pair or candidate set yields a null
     recall/precision instead of an ANSI DIVIDE_BY_ZERO error."""
-    ds = _shingles_shared(spark, sf_dir)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sets = _shingle_sets_shared(spark, sf_dir)
+    ds = _explode_sets(sets)
+    sizes = sets.select("doc_id", F.size("sh").alias("n"))
     a = ds.alias("a")
     b = ds.alias("b")
     inter = (
@@ -1431,63 +1467,27 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complements :func:`dedup_lsh_recall_audit` (which audits what the
     *bands* recall) by auditing what the *signature* estimates; the
     mean bias per bin is what you'd consult before cutting K at scale.
-    Rides the memoized candidate set and one extra signature aggregate
-    (1 row/doc) plus the candidate-restricted exact verify — no new
-    corpus-sized shuffles beyond the shared mining pass.
+    Rides the memoized candidate set and set relation: one doc-level
+    join per candidate side yields both the signature collisions and
+    the exact Jaccard — no corpus-sized shuffle beyond the shared
+    mining pass.
     """
-    ds = _shingles_shared(spark, sf_dir)
     cands = _lsh_candidates_shared(spark, sf_dir)
-    sig = _minhash_signatures(ds)
-    s1 = sig.alias("s1")
-    s2 = sig.alias("s2")
+    pairs = _with_sides(cands, _minhash_signatures(_shingle_sets_shared(spark, sf_dir)))
     matches = sum(
-        [
-            F.when(F.col(f"s1.h{i}") == F.col(f"s2.h{i}"), 1).otherwise(0)
-            for i in range(_K)
-        ],
+        [F.when(F.col(f"h{i}1") == F.col(f"h{i}2"), 1).otherwise(0) for i in range(_K)],
         F.lit(0),
     )
-    est = (
-        cands.join(s1, F.col("d1") == F.col("s1.doc_id"))
-        .join(s2, F.col("d2") == F.col("s2.doc_id"))
-        .select(
-            "d1",
-            "d2",
-            # Integer collision count kept alongside the ratio: the
-            # bin means are computed from exact integer sums
-            # (rounded-sum-divide convention) so no floating
-            # accumulation order can fork a 4-dp boundary.
-            matches.cast("long").alias("est_m"),
-            (matches / F.lit(float(_K))).alias("est_j"),
-        )
+    est = pairs.select(
+        # Integer collision count kept alongside the ratio: the bin
+        # means are computed from exact integer sums (rounded-sum-
+        # divide convention) so no floating accumulation order can
+        # fork a 4-dp boundary.
+        matches.cast("long").alias("est_m"),
+        (matches / F.lit(float(_K))).alias("est_j"),
+        _exact_jaccard().alias("exact_j"),
     )
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = ds.alias("a")
-    b = ds.alias("b")
-    inter = (
-        cands.join(a, F.col("d1") == F.col("a.doc_id"))
-        .join(
-            b,
-            (F.col("d2") == F.col("b.doc_id"))
-            & (F.col("a.shingle") == F.col("b.shingle")),
-        )
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    exact = (
-        cands.join(inter, ["d1", "d2"], "left")
-        .join(sizes.withColumnRenamed("doc_id", "d1").withColumnRenamed("n", "n1"), "d1")
-        .join(sizes.withColumnRenamed("doc_id", "d2").withColumnRenamed("n", "n2"), "d2")
-        .select(
-            "d1",
-            "d2",
-            (
-                F.coalesce(F.col("n_common"), F.lit(0))
-                / (F.col("n1") + F.col("n2") - F.coalesce(F.col("n_common"), F.lit(0)))
-            ).alias("exact_j"),
-        )
-    )
-    joined = est.join(exact, ["d1", "d2"]).select(
+    joined = est.select(
         F.least(
             F.floor(F.abs(F.col("est_j") - F.col("exact_j")) * _EST_ERR_BINS),
             F.lit(_EST_ERR_BINS - 1).cast("long"),

@@ -2,11 +2,14 @@
 
 All loads are plain ``spark.read.parquet`` scans — declarative, so
 Catalyst pushes filters and prunes columns into the vectorized parquet
-reader. The one special case is ``events``: its ``ts`` column is
-parquet ``TIMESTAMP(NANOS)`` which Spark cannot represent natively, so
-we read it as raw nanos (``spark.sql.legacy.parquet.nanosAsLong``) and
-project an explicit ns→µs truncation to ``timestamp_ntz``, matching
-what DuckDB does when it reads the same file.
+reader. A table's schema is inferred on its first read in a process
+and passed back with ``.schema(...)`` after that (:func:`_read_parquet`),
+since inference starts a Spark job per read. The one special case is
+``events``: its ``ts`` column is parquet ``TIMESTAMP(NANOS)`` which
+Spark cannot represent natively, so we read it as raw nanos
+(``spark.sql.legacy.parquet.nanosAsLong``) and project an explicit
+ns→µs truncation to ``timestamp_ntz``, matching what DuckDB does when
+it reads the same file.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from parquet_stream_writer_spark.session import apply_runtime_confs
 
@@ -38,7 +42,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table; ``events`` gets the ns→µs projection."""
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, sf_dir, name)
+
+
+#: Confs that change the schema Spark infers from a parquet footer.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: _read_parquet's memoized inferred schemas (this process only).
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``spark.read.parquet`` of one table, inferring its schema only
+    on the first read: inference starts a Spark job (~0.1 s) per call,
+    a declared schema starts none. The memo key carries the path, the
+    table's stat() fingerprint and every conf that changes the
+    inferred types, so an in-process rewrite or conf flip re-infers."""
+    path = f"{sf_dir}/{name}.parquet"
+    confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+    key = (path, table_fingerprint(sf_dir, name), confs)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def scan_parallel(spark: SparkSession, sf_dir: str, name: str, *keys: str) -> DataFrame:
@@ -85,6 +119,11 @@ def clear_scan_cache() -> None:
     _SPLITS_ENOUGH.clear()
 
 
+def clear_schema_cache() -> None:
+    """Drop all memoized inferred schemas (test hook)."""
+    _SCHEMAS.clear()
+
+
 def table_fingerprint(sf_dir: str, name: str) -> tuple:
     """Cheap identity fingerprint of a table's parquet path: (name,
     mtime_ns, size) of the file, or of every direct child for a
@@ -116,7 +155,7 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounding) matches DuckDB's ns→µs read behavior.
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = _read_parquet(spark, sf_dir, "events")
     if dict(df.dtypes)["ts"] == "bigint":
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")

@@ -1,10 +1,11 @@
 """Invalidation behavior of the in-session memos.
 
-Two memos carry cross-query state: the dedup mining memo
-(``operators.dedup._MEMO`` — shingles, LSH candidates, verified
-pairs, CC labels) and the ``scan_parallel`` split-probe memo
-(``sources._SPLITS_ENOUGH``).  Both key on a stat() fingerprint of
-the backing table, so an in-process rewrite of the corpus must yield
+Three memos carry cross-query state: the dedup mining memo
+(``operators.dedup._MEMO`` — shingle sets, LSH candidates, verified
+pairs, CC labels), the ``scan_parallel`` split-probe memo
+(``sources._SPLITS_ENOUGH``) and the inferred-schema memo
+(``sources._SCHEMAS``).  All key on a stat() fingerprint of the
+backing table, so an in-process rewrite of the corpus must yield
 fresh results, never a replay of the previous corpus's checkpoint.
 """
 
@@ -235,3 +236,101 @@ def test_table_fingerprint_changes_on_rewrite(spark, tmp_path):
     fp2 = table_fingerprint(str(sf), "documents")
     assert fp1 != fp2
     assert table_fingerprint(str(sf), "nope") == ("missing",)
+
+
+def _jobs_started(spark, group, action):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_schema_memo_matches_inference_for_every_table(spark):
+    """The memoized schema a second load declares is the schema the
+    first load inferred, for all ten corpus tables (``events`` under
+    its nanos-as-long read), and the rows read with it are the same."""
+    from parquet_stream_writer_spark.sources import (
+        TABLES,
+        clear_schema_cache,
+        load_table,
+    )
+    from tests.conftest import SF_DIR
+
+    clear_schema_cache()
+    inferred = {t: load_table(spark, SF_DIR, t) for t in TABLES}
+    for t in TABLES:
+        declared = load_table(spark, SF_DIR, t)
+        assert declared.schema == inferred[t].schema, t
+    for t in ("events", "documents"):
+        a, b = load_table(spark, SF_DIR, t), inferred[t]
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, t
+
+
+def test_schema_memo_second_load_starts_no_job(spark):
+    from parquet_stream_writer_spark.sources import clear_schema_cache, load_table
+    from tests.conftest import SF_DIR
+
+    clear_schema_cache()
+    for t in ("documents", "events"):
+        assert _jobs_started(spark, f"schema-first-{t}", lambda: load_table(spark, SF_DIR, t)) >= 1
+        assert _jobs_started(spark, f"schema-second-{t}", lambda: load_table(spark, SF_DIR, t)) == 0
+
+
+def test_schema_memo_reinfers_after_rewrite(spark, tmp_path):
+    from parquet_stream_writer_spark.sources import load_table
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    _write_docs(spark, sf, [(1, _BASE, "en", "a", 60)])
+    assert "extra" not in load_table(spark, str(sf), "documents").columns
+    time.sleep(0.05)
+    spark.createDataFrame(
+        [(1, _BASE, "en", "a", 60, 7)],
+        "doc_id long, text string, lang string, source string, n_chars long, extra int",
+    ).coalesce(1).write.mode("overwrite").parquet(str(sf / "documents.parquet"))
+    df = load_table(spark, str(sf), "documents")
+    assert "extra" in df.columns and df.collect()[0]["extra"] == 7
+
+
+def test_schema_memo_reinfers_on_type_conf_flip(spark, tmp_path):
+    """A conf that changes the inferred types is part of the memo key:
+    with ``nanosAsLong`` off, a TIMESTAMP(NANOS) column cannot be
+    inferred at all, so the read must raise rather than replay the
+    memoized BIGINT schema; ``binaryAsString`` flips BINARY to STRING."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from parquet_stream_writer_spark.sources import _read_parquet
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array([1_000_000_001], pa.timestamp("ns")),
+                "b": pa.array([b"xy"], pa.binary()),
+            }
+        ),
+        sf / "t.parquet",
+    )
+    confs = ("spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString")
+    old = {c: spark.conf.get(c, None) for c in confs}
+    try:
+        spark.conf.set(confs[0], "true")
+        spark.conf.set(confs[1], "false")
+        assert dict(_read_parquet(spark, str(sf), "t").dtypes) == {"ts": "bigint", "b": "binary"}
+        spark.conf.set(confs[1], "true")
+        assert dict(_read_parquet(spark, str(sf), "t").dtypes)["b"] == "string"
+        spark.conf.set(confs[0], "false")
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL|Illegal Parquet type"):
+            _read_parquet(spark, str(sf), "t")
+    finally:
+        for c, v in old.items():
+            if v is None:
+                spark.conf.unset(c)
+            else:
+                spark.conf.set(c, v)

@@ -89,16 +89,18 @@ def test_shingle_build_has_no_window_exchange(spark):
     """The shingle stage must be map-side after its single keyed
     repartition — a Window/Sort in the plan means the slow
     posexplode+lead shape crept back in."""
-    from parquet_stream_writer_spark.operators.dedup import _shingles
+    from parquet_stream_writer_spark.operators.dedup import _shingle_sets
 
     # Other suites may have cached the shingle relation; a cached plan
     # explains as InMemoryRelation(materialization plan) and double-
     # counts its exchanges. Clear so we pin the *logical* shape.
     spark.catalog.clearCache()
-    df = _shingles(spark, SF_DIR)
+    df = _shingle_sets(spark, SF_DIR)
     p = plan(spark, df)
     assert "Window" not in p, p
-    # one repartition exchange + one distinct exchange, nothing more
+    # one exchange (the formatted plan names each node twice): the
+    # scan's keyed repartition, or else the doc_id grouping's own —
+    # never both, and never one over the shingle stream
     assert p.count("Exchange") <= 2, p
 
 
@@ -202,20 +204,53 @@ def test_tokenize_ids_encodes_via_broadcast(spark):
     assert "SortMergeJoin" not in p, p
 
 
-def test_minhash_signatures_hash_aggregate(spark):
-    """The K-wide min-hash signature agg must be a HashAggregate —
-    var-length string buffers would demote it to a SortAggregate,
-    i.e. a full sort of the shingle stream (the largest relation in
-    the dedup pipeline)."""
+def test_minhash_miner_no_sort_aggregate_no_pre_band_exchange(spark):
+    """The signatures and band keys are map-side over the per-document
+    shingle sets: between the set relation and the band explode there
+    is no Exchange and no aggregate. Nowhere in the miner (set build,
+    bucket aggregate, candidate distinct, verification) may an
+    aggregate be a SortAggregate — var-length buffers in a plain
+    HashAggregate demote it to a full sort of its input."""
     from parquet_stream_writer_spark.operators.dedup import (
-        _minhash_signatures,
-        _shingles,
+        _band_keys,
+        _lsh_candidates,
+        _shingle_sets,
+        _verified_pairs_plan,
     )
 
-    df = _minhash_signatures(_shingles(spark, SF_DIR))
-    p = plan(spark, df, "simple")
-    assert "SortAggregate" not in p, p
-    assert "HashAggregate" in p, p
+    spark.catalog.clearCache()
+    sets = _shingle_sets(spark, SF_DIR)
+    p_sets, p_bands = plan(spark, sets, "simple"), plan(spark, _band_keys(sets), "simple")
+    assert "Generate explode" in p_bands, p_bands
+    assert p_bands.count("Exchange") == p_sets.count("Exchange"), p_bands
+    assert p_bands.count("Aggregate") == p_sets.count("Aggregate"), p_bands
+    for df in (_lsh_candidates(sets), _verified_pairs_plan(spark, SF_DIR)):
+        p = plan(spark, df, "simple")
+        assert "SortAggregate" not in p, p
+        assert "HashAggregate" in p, p
+
+
+def test_minhash_lsh_job_budget(spark):
+    """Mining ``dedup_minhash_lsh`` from cleared memos (dedup and
+    schema) and collecting it starts at most 8 Spark jobs: schema
+    inference, the scan's keyed repartition, the set-relation cache,
+    the bucket exchange, the candidate distinct, the two verification
+    sides and the collect. The shingle-row miner it replaced ran 14."""
+    from parquet_stream_writer_spark.operators import dedup
+    from parquet_stream_writer_spark.sources import clear_schema_cache
+
+    sc = spark.sparkContext
+    dedup.clear_dedup_memo()
+    clear_schema_cache()
+    sc.setJobGroup("minhash-lsh-budget", "minhash-lsh-budget")
+    try:
+        rows = dedup.dedup_minhash_lsh(spark, SF_DIR).collect()
+    finally:
+        sc.setJobGroup("", "")
+        dedup.clear_dedup_memo()
+    jobs = sc.statusTracker().getJobIdsForGroup("minhash-lsh-budget")
+    assert rows
+    assert len(jobs) <= 8, len(jobs)
 
 
 def test_q8_market_share_broadcasts_all_seven_dims(spark):
