@@ -54,7 +54,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from parquet_stream_writer_spark.operators import all_queries, dedup  # noqa: E402
-from parquet_stream_writer_spark.session import get_session  # noqa: E402
+from parquet_stream_writer_spark.session import codegen_counters, get_session  # noqa: E402
 
 
 def main() -> None:
@@ -183,6 +183,7 @@ def main() -> None:
     memo_shared: list[str] = []
     memo_rep1: dict[str, float] = {}
     _record_probe(0, None)  # opening bracket
+    codegen_before = codegen_counters(spark)
     for name, fn in queries.items():
         reps = repeats if (time.perf_counter() - t_start) < budget else 1
         runs: list[float] = []
@@ -214,6 +215,7 @@ def main() -> None:
     if not host_probes or host_probes[-1]["after_idx"] != len(timings):
         _record_probe(len(timings), None)  # closing bracket
 
+    codegen_after = codegen_counters(spark)
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     payload = {
         "metric": "total_query_wall_sec",
@@ -237,6 +239,12 @@ def main() -> None:
         # In-sweep 10M-loop host probes (offsets + after_idx localize a
         # load window to the key segment it overlapped — r17 item 5).
         "host_probes": host_probes,
+        # Generated classes Janino compiled during the sweep and their
+        # compile time (additive): near zero after each class's first use
+        # while the codegen cache holds the sweep's working set.
+        "codegen": {
+            k: round(codegen_after[k] - codegen_before[k], 1) for k in ("compiles", "compile_ms")
+        },
         "queries": timings,
         "sf": sf,
     }

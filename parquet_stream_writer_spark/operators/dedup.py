@@ -285,20 +285,23 @@ def _explode_sets(sets: DataFrame) -> DataFrame:
 
 
 #: Oracle twin of :func:`_shingle_sets`, exploded, as a CTE body (DuckDB dialect —
-#: unnest/generate_subscripts instead of posexplode; lead is shared).
+#: unnest/generate_subscripts instead of posexplode; lead is shared). Each
+#: source row is shingled on its own (windows over a row id), so a doc_id on
+#: several rows gets the union of its rows' shingles, as in Spark.
 _SQL_SHINGLES = """
+doc_rows AS (SELECT row_number() OVER () AS rid, doc_id, text FROM documents),
 toks AS (
-  SELECT doc_id,
+  SELECT rid, doc_id,
          unnest(string_split(lower(text), ' ')) AS tok,
          generate_subscripts(string_split(lower(text), ' '), 1) AS pos
-  FROM documents
+  FROM doc_rows
 ),
 shingled AS (
   SELECT doc_id,
          CASE WHEN lead(tok, 2) OVER w IS NOT NULL
               THEN tok || ' ' || lead(tok, 1) OVER w || ' ' || lead(tok, 2) OVER w
          END AS shingle
-  FROM toks WINDOW w AS (PARTITION BY doc_id ORDER BY pos)
+  FROM toks WINDOW w AS (PARTITION BY rid ORDER BY pos)
 ),
 ds AS (SELECT DISTINCT doc_id, shingle FROM shingled WHERE shingle IS NOT NULL)
 """

@@ -6,12 +6,10 @@ enough to shingle, no repeated phrases, no LSH bucket anywhere near
 shingle-set miner must treat exactly like the oracle's shingle-row
 formulation:
 
-- a doc_id spread over several rows (its shingle set is the union of
-  its rows' sets).  The oracle shingles with ``lead`` over ``ORDER BY
-  pos`` per doc_id, which interleaves the tokens of two texts that
-  share a doc_id, so the differential repeats a doc_id only with a
-  NULL text (no tokens on the oracle side); the union itself is
-  pinned against a pure-Python shingler;
+- a doc_id spread over several rows, two of them non-NULL (its
+  shingle set is the union of its rows' sets, never a shingle that
+  runs across two texts); the union is also pinned against a
+  pure-Python shingler;
 - documents with fewer than three tokens (no shingles at all);
 - empty and NULL text;
 - shingles repeated within one document (set, not multiset, sizes);
@@ -53,8 +51,14 @@ def _hostile_rows() -> list[tuple]:
     text = " ".join(_WORDS[:12])
     # near-dup family: a base text and one-token edits of it
     rows += [(1, text), (2, text + " zulu"), (3, "x " + text), (4, text.replace("golf", "gulf"))]
-    # doc_id 5 spans two rows, one of them NULL; it near-duplicates doc 6
-    rows += [(5, " ".join(_WORDS[10:22])), (5, None), (6, " ".join(_WORDS[10:21]))]
+    # doc_id 5 spans three rows, one of them NULL; the union of its rows'
+    # shingles near-duplicates doc 6 (Jaccard 9/12)
+    rows += [
+        (5, " ".join(_WORDS[10:22])),
+        (5, None),
+        (5, "zulu yankee xray whiskey"),
+        (6, " ".join(_WORDS[10:21])),
+    ]
     # fewer than three tokens, empty and NULL text
     rows += [(7, "alpha"), (8, "alpha bravo"), (9, ""), (10, None), (11, "   ")]
     # repeated shingles: set sizes differ from row counts
